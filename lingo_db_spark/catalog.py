@@ -166,7 +166,6 @@ def _evict_stale_sessions(new_session_key: str) -> None:
     for victim in seen[: len(seen) - _CACHE_MAX_SESSIONS + 1]:
         for k in [k for k in _RELATION_CACHE if k[0] == victim]:
             del _RELATION_CACHE[k]
-        _VIEW_MEMO.pop(victim, None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -217,48 +216,16 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-# Which catalog views each session currently has bound, and to which
-# sf_dir (r15 opt round, guide §5 driver work): the raw-SQL query
-# functions call register_views on EVERY invocation, and each
-# createOrReplaceTempView is a ~8 ms py4j/catalog round-trip — pure
-# per-call driver churn for identical inputs (measured: 54 ms of
-# job_ten_way_min_chain's 250 ms wall re-binding 7 unchanged views).
-# The memo skips the re-bind when THIS module already bound that view,
-# in this session, to the same sf_dir's relation.  Anything else that
-# (re)binds or drops a temp view must call note_view_bind() so the memo
-# forgets the name — all in-repo bind sites do (connection.py DDL door,
-# plans/cse.py, sources/, sqlfront's mapped relations).  No plan or
-# data is cached here: the view still resolves to the lazily-scanned
-# parquet relation, this only skips redundant catalog writes.
-_VIEW_MEMO: dict[str, dict[str, str]] = {}
-
-
-def note_view_bind(spark: SparkSession, name: str) -> None:
-    """Record that `name` was bound/dropped OUTSIDE register_views: the
-    next register_views must re-bind it (temp view names are
-    case-insensitive in Spark's catalog — normalize)."""
-    m = _VIEW_MEMO.get(session_key(spark))
-    if m:
-        m.pop(name.lower(), None)
-
-
 def register_views(spark: SparkSession, sf_dir: str,
                    names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     """Register every table as a temp view so spark.sql() sees the same
-    catalog the DuckDB oracle does.  Idempotent calls (same session,
-    same sf_dir, view not rebound elsewhere since) skip the catalog
-    round-trip — see _VIEW_MEMO.  LDB_VIEW_MEMO=0 restores the
-    unconditional re-bind (A/B arm)."""
+    catalog the DuckDB oracle does.  Every call re-binds every view:
+    anything else in the session (the DDL door, sources, CSE, mapped
+    relations) may have re-bound a catalog name since the last call, and
+    a query's result must not depend on what ran before it."""
     dfs = load_tables(spark, sf_dir, names)
-    if os.environ.get("LDB_VIEW_MEMO", "1") != "1":
-        for n, df in dfs.items():
-            df.createOrReplaceTempView(n)
-        return dfs
-    memo = _VIEW_MEMO.setdefault(session_key(spark), {})
     for n, df in dfs.items():
-        if memo.get(n.lower()) != sf_dir:
-            df.createOrReplaceTempView(n)
-            memo[n.lower()] = sf_dir
+        df.createOrReplaceTempView(n)
     return dfs
 
 

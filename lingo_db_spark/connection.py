@@ -15,33 +15,21 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from lingo_db_spark import catalog
-from lingo_db_spark.session import build_session
+from lingo_db_spark.session import build_session, local_frame
 
 
-# Lazy-PLAN caches for the initialize.sql loading journey (r14 opt
+# Lazy-PLAN cache for the initialize.sql loading journey (r14 opt
 # round, guide §5: the driver should do almost no per-call work).  The
-# verbatim anchors re-run the same script per timed run, and steady
-# state was ~1.3 s of pure driver/py4j churn per call: ~40 ms per
-# CREATE TABLE (createDataFrame([], schema) builds an empty RDD) and
-# ~22 ms per COPY (DataFrameReader resolution + file listing), for
-# identical inputs every time.  Both caches hold LAZY DataFrames only
-# — an empty local relation (data-independent by construction) and an
-# unmaterialized CSV scan keyed on (path, mtime, size, schema, opts)
-# so a rewritten file can never serve a stale plan; no persist/cache
-# is ever called, so every action still computes from the files.
-_EMPTY_DF_CACHE: dict[tuple, DataFrame] = {}
+# verbatim anchors re-run the same script per timed run, and each COPY
+# paid ~22 ms of DataFrameReader resolution + file listing for identical
+# inputs.  The cache holds LAZY DataFrames only — an unmaterialized CSV
+# scan keyed on (path, mtime, size, schema, opts) so a rewritten file can
+# never serve a stale plan; no persist/cache is ever called, so every
+# action still computes from the files.  CREATE TABLE needs no cache: its
+# empty table is a zero-partition local relation (session.local_frame),
+# built without a job and read without tasks.
 _CSV_PLAN_CACHE: dict[tuple, DataFrame] = {}
 _PLAN_CACHE_MAX = 512
-
-
-def _empty_df(spark: SparkSession, schema: Any) -> DataFrame:
-    key = (id(spark), schema.json())
-    df = _EMPTY_DF_CACHE.get(key)
-    if df is None:
-        if len(_EMPTY_DF_CACHE) >= _PLAN_CACHE_MAX:
-            _EMPTY_DF_CACHE.clear()
-        df = _EMPTY_DF_CACHE[key] = spark.createDataFrame([], schema)
-    return df
 
 
 def _csv_plan(spark: SparkSession, path: str, schema: Any,
@@ -52,7 +40,7 @@ def _csv_plan(spark: SparkSession, path: str, schema: Any,
         stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         stamp = None                    # let the reader raise its error
-    key = (id(spark), path, stamp, schema.json(), opts)
+    key = (catalog.session_key(spark), path, stamp, schema.json(), opts)
     df = _CSV_PLAN_CACHE.get(key)
     if df is None:
         if len(_CSV_PLAN_CACHE) >= _PLAN_CACHE_MAX:
@@ -366,7 +354,7 @@ class Connection:
             name, schema, pk = ct
             self.declared[name] = schema
             self.primary_keys[name] = pk
-            empty = _empty_df(self.spark, schema)
+            empty = local_frame(self.spark, [], schema)
             empty.createOrReplaceTempView(name)
             self.tables[name] = empty
             return

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StructField,
                                StructType)
 
+from lingo_db_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -1404,8 +1406,8 @@ def _exact_rerank(cand: DataFrame, emb: DataFrame, queries: DataFrame,
                                        F.element_at(qvec_arr, idx))
                           .alias("cos")))
     else:
-        q_lookup = spark.createDataFrame(
-            [(i, r[0]) for i, r in enumerate(qrows)],
+        q_lookup = local_frame(
+            spark, [(i, r[0]) for i, r in enumerate(qrows)],
             StructType([StructField("__qi", IntegerType(), False),
                         queries.schema[q_id_col]]))
         scored = (cand.join(F.broadcast(q_lookup), "__qi")
@@ -1688,9 +1690,9 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 10, *,
             cand = _fused_adc_probe_topk(pruned, lut, qdotc, cell_qis,
                                          id_col, rerank)
     else:
-        probes = spark.createDataFrame(
-            [(qi, int(c)) for qi in range(len(qrows))
-             for c in probe_cells[qi]],
+        probes = local_frame(
+            spark, [(qi, int(c)) for qi in range(len(qrows))
+                    for c in probe_cells[qi]],
             "`__qi` INT, `cell` INT")
         pairs = pruned.join(F.broadcast(probes), "cell")
         if not fused:

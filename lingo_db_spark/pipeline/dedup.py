@@ -5,7 +5,7 @@ Scale design (the point of every choice here):
   inside each partition via row_number — never a global sort, never a
   driver collect.
 - MinHash near-dup: signatures are H min-aggregations over exploded
-  shingles (one shuffle on doc id); LSH banding joins only rows that
+  shingles (one shuffle on doc id); LSH banding pairs only rows that
   collide in a (band_id, band_hash) bucket — candidate pairs are
   O(n·bucket_width), never the all-pairs O(n²) crossJoin.
 - SimHash: 64-bit signature via an Arrow-batched pandas UDF (token loop
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from lingo_db_spark.pipeline.barrier import barrier, truncate_lineage
 from lingo_db_spark.pipeline.text import shingles, tokens
+from lingo_db_spark.session import local_frame
 
 
 def dedup_exact(df: DataFrame, key_cols: list[str] | tuple[str, ...],
@@ -75,16 +76,22 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str,
 
     DELIBERATELY NO barrier here: with the zip_with chain the alias
     re-evaluation is per-REFERENCE (bounded, ~2k per row), not
-    per-element, and the r10 A/B (tools/minhash_ab_probe.py, quiet
-    host, bench protocol) measured skipping the extra materialization
-    25% faster end-to-end (1.67 s vs 2.23 s at sf0.1) with zero
-    storage footprint — the shape that also wins at 100 TB, where a
-    second corpus-sized materialization is pure cost.  Callers that
-    consume the result twice persist it themselves (neardup_minhash)."""
-    toked = spread(df.select(
+    per-element, and the r10 A/B (quiet host, bench protocol) measured
+    skipping the extra materialization 25% faster end-to-end (1.67 s vs
+    2.23 s at sf0.1) with zero storage footprint — the shape that also
+    wins at 100 TB, where a second corpus-sized materialization is pure
+    cost.  Callers that consume the result twice persist it themselves
+    (_shingle_sets_and_signatures).
+
+    The raw (id, text) rows are spread BEFORE tokenizing, so the shuffle
+    moves text once and all tokenize/hash work runs after it, on every
+    core.  A filter on `shs` above this frame is still pushed below the
+    repartition (Catalyst pushes deterministic filters through
+    RepartitionByExpression and inlines the whole shingle expression
+    into them), so filter only a materialized copy."""
+    toked = spread(df.select(id_col, text_col), id_col).select(
         F.col(id_col),
-        F.transform(tokens(text_col),
-                    lambda s: F.xxhash64(s)).alias("__t")), id_col)
+        F.transform(tokens(text_col), lambda s: F.xxhash64(s)).alias("__t"))
     t, n = F.col("__t"), F.size("__t")
     gram_h = t
     for j in range(1, shingle_k):
@@ -144,6 +151,23 @@ def _signature_udf(num_hashes: int):
     return _sig
 
 
+def _shingle_sets_and_signatures(df: DataFrame, id_col: str, text_col: str,
+                                 num_hashes: int, shingle_k: int
+                                 ) -> tuple[DataFrame, DataFrame]:
+    """(sets, sigs): the persisted (id, shs) shingle sets, and the
+    (id, sig) MinHash signatures of the non-empty ones.  The persist is
+    what keeps the empty-set filter above the tokenize pass: on a lazy
+    frame Catalyst pushes it below spread()'s repartition and inlines the
+    whole shingle expression (the tokenize chain ~6x) into a single-task
+    Filter before the shuffle: warm over sf0.1's 5k docs on 4 cores,
+    1.0-1.8 s against 0.7-0.8 s for this shape."""
+    sets_ = shingle_hashes(df, id_col, text_col, shingle_k).persist()
+    sigs = (sets_.filter(F.size("shs") > 0)
+            .select(F.col(id_col),
+                    _signature_udf(num_hashes)(F.col("shs")).alias("sig")))
+    return sets_, sigs
+
+
 def minhash_signature(df: DataFrame, id_col: str, text_col: str,
                       num_hashes: int = 64, shingle_k: int = 3) -> DataFrame:
     """(id, sig: array<bigint>) — MinHash signature over distinct k-token
@@ -151,10 +175,8 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     empty-set sentinel signature would collide every empty doc into every
     band bucket (quadratic pair blowup); route empties to exact dedup
     instead."""
-    sh = (shingle_hashes(df, id_col, text_col, shingle_k)
-          .filter(F.size("shs") > 0))
-    return sh.select(F.col(id_col),
-                     _signature_udf(num_hashes)(F.col("shs")).alias("sig"))
+    return _shingle_sets_and_signatures(df, id_col, text_col, num_hashes,
+                                        shingle_k)[1]
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str,
@@ -162,11 +184,12 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str,
                         max_bucket_size: int | None = 10_000,
                         sig_len: int | None = None) -> DataFrame:
     """(id_a, id_b) candidate pairs: docs whose signatures agree on at
-    least one full band.  Self-join restricted to (band_id, band_hash)
-    buckets.  max_bucket_size drops degenerate buckets (e.g. the empty-
-    document signature) that would otherwise produce quadratic pair blowup
-    — the skew guard a 100TB run needs; dropped buckets are by definition
-    huge duplicate classes better handled by exact dedup first."""
+    least one full band.  Pairs come only from inside (band_id,
+    band_hash) buckets.  max_bucket_size drops degenerate buckets (e.g.
+    the empty-document signature) that would otherwise produce quadratic
+    pair blowup — the skew guard a 100TB run needs; dropped buckets are
+    by definition huge duplicate classes better handled by exact dedup
+    first."""
     if sig_len is None:
         # Fallback probe (runs a job): prefer passing sig_len explicitly.
         first = sig_df.select(F.size("sig").alias("n")).head(1)
@@ -190,25 +213,25 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str,
         F.col(id_col),
         F.posexplode(F.expr(f"array({band_exprs})"))
         .alias("band_id", "band_hash"))
+    # One pass over the banded rows: a groupBy on (band_id, band_hash)
+    # collects each bucket's sorted member ids, the size guard drops
+    # singletons and degenerate buckets, and the pairs explode out of
+    # each kept bucket.  A window count plus a self-join evaluated the
+    # signature UDF and the bucket window once per join side (measured
+    # on neardup_minhash's executed plan: ArrowEvalPython 2 -> 1, Window
+    # 2 -> 0, shuffles 3 -> 2).  Members are distinct and sorted, so
+    # those after position i pair with member i as id_b > id_a.
+    ids = F.col("__ids")
+    guard = F.size(ids) > 1
     if max_bucket_size is not None:
-        # Window count, deliberately: one hash shuffle on (band_id,
-        # band_hash) computes the counts AND leaves the data partitioned
-        # exactly as the candidate self-join needs it (exchange reuse) —
-        # a groupBy-count side table would have ~n*bands/width rows here
-        # (band_hash cardinality grows with n), far too big to broadcast
-        # at scale.  operators/similarity.embed_neardup now uses the
-        # same window form (r14 opt round): even with its bounded
-        # bucket space, the groupBy+broadcast guard replayed the
-        # bucketize UDF under the counts branch and both join sides —
-        # one reused exchange is strictly fewer passes.
-        wcnt = Window.partitionBy("band_id", "band_hash")
-        banded = (banded.withColumn("__bc", F.count(F.lit(1)).over(wcnt))
-                  .filter(F.col("__bc") <= max_bucket_size).drop("__bc"))
-    a = banded.select(F.col(id_col).alias("id_a"), "band_id", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_id", "band_hash")
-    return (a.join(b, ["band_id", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+        guard = guard & (F.size(ids) <= max_bucket_size)
+    return (banded.groupBy("band_id", "band_hash")
+            .agg(F.array_sort(F.collect_set(id_col)).alias("__ids"))
+            .filter(guard)
+            .select(ids, F.posexplode(ids).alias("__i", "id_a"))
+            .select("id_a", F.explode(F.slice(ids, F.col("__i") + 2,
+                                              F.size(ids))).alias("id_b"))
+            .distinct())
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -229,11 +252,9 @@ def neardup_minhash(df: DataFrame, id_col: str, text_col: str,
     candidates removes LSH false positives entirely, so the output equals
     the all-pairs answer with near-certainty at ~O(n) cost."""
     # The shingle sets feed both the signatures and the exact re-score:
-    # persist so the tokenize+shingle+hash pass runs once, not twice.
-    sets_ = shingle_hashes(df, id_col, text_col, shingle_k).persist()
-    sigs = (sets_.filter(F.size("shs") > 0)
-            .select(F.col(id_col),
-                    _signature_udf(num_hashes)(F.col("shs")).alias("sig")))
+    # persisted so the tokenize+shingle+hash pass runs once, not twice.
+    sets_, sigs = _shingle_sets_and_signatures(df, id_col, text_col,
+                                               num_hashes, shingle_k)
     cands = lsh_candidate_pairs(sigs, id_col, bands, sig_len=num_hashes)
     # Exact Jaccard over hashed shingle sets: same value as over the
     # string sets (hashing is set-size-preserving), integer comparisons.
@@ -268,23 +289,25 @@ def neardup_clusters(ids: DataFrame, pairs: DataFrame,
     # — singletons are attached at the end with label = own id.
     #
     # Strategy switch on graph size (the kmeans-centroid precedent — a
-    # bounded collect is legitimate): below the threshold the skinny
-    # (id_a, id_b) list fits trivially on the driver and union-find
-    # resolves it in one pass, replacing diameter-many join rounds; above
-    # it, distributed min-label propagation takes over.
-    # One materialization of the (expensive) pair-generation pipeline
-    # serves the size probe, the driver collect, and the edge list.
-    pairs = pairs.persist()
-    n_edges = pairs.count()
+    # bounded collect is legitimate): a graph of at most driver_max_edges
+    # skinny (id_a, id_b) rows fits trivially on the driver and
+    # union-find resolves it in one pass, replacing diameter-many join
+    # rounds; above it, distributed min-label propagation takes over.
+    # One bounded collect both takes the edges and tells the two apart —
+    # a count() first ran the pair pipeline twice (or paid a persist).
+    edges_local = pairs.select("id_a", "id_b").limit(driver_max_edges + 1) \
+        .collect()
+    small = len(edges_local) <= driver_max_edges
     # Observability (the r3 bench moved 0.69->3.07 s on a dirtier data
     # drop with no code change): the edge count IS the cost driver, so
     # print it where bench stderr captures it — a runtime regression
     # with a flat edge count is plan drift; with a grown edge count it
     # is the data.
-    print(f"[neardup_clusters] n_edges={n_edges} "
-          f"strategy={'driver-union-find' if n_edges <= driver_max_edges else 'min-label-propagation'}",
+    n_edges = len(edges_local) if small else f">{driver_max_edges}"
+    strategy = "driver-union-find" if small else "min-label-propagation"
+    print(f"[neardup_clusters] n_edges={n_edges} strategy={strategy}",
           file=_sys.stderr)
-    if n_edges <= driver_max_edges:
+    if small:
         parent: dict = {}
 
         def find(x):
@@ -295,17 +318,17 @@ def neardup_clusters(ids: DataFrame, pairs: DataFrame,
                 parent[x], x = r, parent[x]
             return r
 
-        for a, b in pairs.select("id_a", "id_b").collect():
+        for a, b in edges_local:
             ra, rb = find(a), find(b)
             if ra != rb:
                 # union by min-label so the root IS the cluster id
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        labels = [(x, find(x)) for x in parent]
-        spark = ids.sparkSession
-        cur = spark.createDataFrame(labels or [(None, None)],
-                                    "id BIGINT, lbl BIGINT").filter(
-            F.col("id").isNotNull())
+        # A local relation: the labels ride in the plan, so the broadcast
+        # below runs no Python tasks (a pickled-RDD createDataFrame cost
+        # 1.4 s cold here).
+        cur = local_frame(ids.sparkSession, [(x, find(x)) for x in parent],
+                          "id BIGINT, lbl BIGINT")
         everyone = ids.select(F.col(id_col).alias("id"))
         labeled = (everyone.join(F.broadcast(cur), "id", "left")
                    .select("id", F.coalesce("lbl", F.col("id")).alias("lbl")))
@@ -318,10 +341,12 @@ def neardup_clusters(ids: DataFrame, pairs: DataFrame,
     # the entire upstream pair-generation pipeline (for MinHash pairs,
     # ~6 rounds x the full LSH pass — measured 9s vs 1.6s at sf0.1).  The
     # standard iterative-graph idiom: cache the edges, iterate the labels.
-    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .union(pairs.select(F.col("id_b").alias("src"),
-                                 F.col("id_a").alias("dst")))
-             .persist())
+    # Both directions come out of one read of `pairs`, so the pair
+    # pipeline runs once more here, not once per direction.
+    edges = (pairs.select(F.inline(F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))))
+        .persist())
     cur = (edges.select(F.col("src").alias("id")).distinct()
            .withColumn("lbl", F.col("id")))
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lingo_db_spark.operators.similarity import dot
+from lingo_db_spark.session import local_frame
 
 
 def iterate(df: DataFrame,
@@ -176,7 +177,7 @@ def bfs_levels(edges: DataFrame, source, src_col: str = "src",
     from pyspark.sql import functions as F
 
     spark = edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], f"node long, level int")
+    visited = local_frame(spark, [(source, 0)], "node long, level int")
     frontier = visited.select("node")
     level = 0
     while level < max_depth:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lingo_db_spark.session import local_frame
+
 # Conservative per-value byte widths for broadcast sizing (Spark's own
 # defaultSize values, with strings/binary taken at a pessimistic 24 B
 # payload + overhead unless measured from the sample).
@@ -76,8 +78,7 @@ class SampledTable:
         # on a broadcast-sized local relation, never rescanning the base.
         self._rows = sdf.collect()
         self.sample_n = max(len(self._rows), 1)
-        self._sample = df.sparkSession.createDataFrame(
-            self._rows, schema=df.schema) if self._rows else df.limit(0)
+        self._sample = local_frame(df.sparkSession, self._rows, df.schema)
 
     def selectivity(self, predicate: Column | None) -> float:
         """Fraction of sample rows passing `predicate` — the reference's

@@ -50,6 +50,66 @@ def test_minhash_plan_has_no_cartesian_product(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _physical_nodes(df) -> dict[str, int]:
+    """Node-class counts of df's physical plan, looking through AQE and
+    query-stage wrappers (cached relations count as one scan node)."""
+    from collections import Counter
+    seen: Counter = Counter()
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        seen[cls] += 1
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return seen
+
+
+def test_minhash_signature_udf_and_bucketing_run_once(spark):
+    """LSH candidates come from one groupBy over the banded signatures:
+    the signature UDF is evaluated once and no bucket window remains (a
+    window count plus a self-join evaluated both once per join side)."""
+    docs = load_table(spark, SF_DIR, "documents")
+    nodes = _physical_nodes(pl.neardup_minhash(docs, "doc_id", "text"))
+    assert nodes["ArrowEvalPythonExec"] == 1, nodes
+    assert nodes["WindowExec"] == 0, nodes
+
+
+def test_minhash_signature_tokenizes_once(spark):
+    """The empty-set filter must not be pushed below spread()'s
+    repartition: that inlines the whole tokenize chain into a
+    single-task Filter ahead of the shuffle."""
+    # an input no other test persists a shingle pass over, so the plan
+    # cannot pick up another test's cached sets
+    docs = load_table(spark, SF_DIR, "documents").where("doc_id % 2 = 0")
+    sigs = pl.minhash_signature(docs, "doc_id", "text")
+    plan = sigs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_replace(") == 1, plan
+
+
+def test_lsh_candidates_are_bucket_pairs_under_the_size_guard(spark):
+    # 2 bands x 2 rows: band 0 puts {1,2,3} in one bucket, band 1 {1,4}
+    sigs = spark.createDataFrame(
+        [(1, [1, 1, 5, 5]), (2, [1, 1, 6, 6]), (3, [1, 1, 7, 7]),
+         (4, [9, 9, 5, 5]), (5, [8, 8, 8, 8])],
+        "doc_id BIGINT, sig ARRAY<BIGINT>")
+
+    def cands(max_bucket_size):
+        return sorted(tuple(r) for r in pl.lsh_candidate_pairs(
+            sigs, "doc_id", bands=2, max_bucket_size=max_bucket_size,
+            sig_len=4).collect())
+
+    assert cands(None) == [(1, 2), (1, 3), (1, 4), (2, 3)]
+    assert cands(3) == [(1, 2), (1, 3), (1, 4), (2, 3)]
+    assert cands(2) == [(1, 4)]
+
+
 def test_lsh_candidates_far_below_all_pairs(spark):
     docs = load_table(spark, SF_DIR, "documents")
     n = docs.count()
