@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lingo_db_spark.catalog import register_views
+from lingo_db_spark.catalog import load_table, register_views
 from lingo_db_spark.plans.cse import (
     auto_persist_common_subtrees,
     sql_with_cte_cse,
@@ -59,7 +59,7 @@ def cse_selfjoin_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold compare stays in exact integers (qty * n > total) so no
     float boundary can flip a row between engines."""
     _drain_scope("cse_selfjoin_auto")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     per = li.groupBy("l_suppkey").agg(
         F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty")
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from conftest import SF_DIR
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
