@@ -19,7 +19,8 @@ file has fewer row groups than ``pieces = min(defaultParallelism,
 num_rows // MORSEL_ROWS)``, streams it once into ``pieces`` contiguous
 parquet files under the process temp dir (removed at exit) and scans
 that directory instead: one morsel per core.  A file that already has
-enough row groups is read in place, never copied.
+enough row groups, and a table stored as a directory of part files, is
+read in place, never copied.
 """
 
 from __future__ import annotations
@@ -135,13 +136,15 @@ _RAW_TYPE_ALTERNATES: dict[str, dict[str, tuple[str, ...]]] = {
 # core, and into no piece smaller than this.
 MORSEL_ROWS = 1 << 15
 
-# One record per source file, keyed on (path, st_size, st_mtime_ns,
-# pieces): the file passed the declared-schema check (the reference's
-# fixed-schema contract: no inference, a mismatched file is an error, not
-# a silent cast), and the value is the path Spark scans for it (the file
-# itself or the directory of its morsel pieces).  A file replaced at the
-# same path has a new key, so it is checked and split again, not trusted.
-_FILE_RECORDS: dict[tuple[str, int, int, int], str] = {}
+# One record per table version, keyed on (path, st_size, st_mtime_ns,
+# pieces) for a one-file table and on (path, listing) for a multi-file
+# table directory: the table passed the declared-schema check (the
+# reference's fixed-schema contract: no inference, a mismatched file is
+# an error, not a silent cast), and the value is the path Spark scans for
+# it (the table itself or the directory of its morsel pieces).  A table
+# replaced at the same path has a new key, so it is checked (and split)
+# again, not trusted.
+_FILE_RECORDS: dict[tuple, str] = {}
 
 def session_key(spark: SparkSession) -> str:
     """Stable, never-reused identity token for a session (r15, verdict
@@ -198,8 +201,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The parquet footer schema is validated against the declared catalog
     schema (names + types; parquet files are always nullable on read, so
     nullability is enforced by the writer, not checked here).  Validation
-    runs once per file version — a footer read, no data scan.  The scan
-    reads the file's morsel layout (module docstring)."""
+    runs once per table version — a footer read, no data scan.  The scan
+    reads the table's morsel layout (module docstring)."""
     if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     path = table_path(sf_dir, name)
@@ -223,23 +226,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _scan(spark: SparkSession, name: str, path: str) -> DataFrame:
-    """The raw parquet relation for one source file: the file itself, or
-    its morsel pieces when it has fewer row groups than cores."""
+    """The raw parquet relation for one table: its morsel pieces when it is
+    one file with fewer row groups than cores, else the path itself."""
     import pyarrow.parquet as pq
 
+    if not os.path.isfile(path):
+        # A multi-file table directory (tools/make_scaled_data.py writes
+        # Spark part files, as real ingest does) is already split: read it
+        # in place.  A directory's own size and mtime do not track its
+        # files, so its version is its listing.
+        return _read_checked(spark, name, path, (path, _listing(path)))
     st = os.stat(path)
     with pq.ParquetFile(path) as pf:
         pieces = min(spark.sparkContext.defaultParallelism,
                      pf.metadata.num_rows // MORSEL_ROWS)
         key = (path, st.st_size, st.st_mtime_ns, pieces)
-        if key not in _FILE_RECORDS:
-            df = spark.read.parquet(path)
-            _check_schema(name, df)
-            if pf.metadata.num_row_groups >= pieces:
-                _FILE_RECORDS[key] = path
-                return df
+        if key not in _FILE_RECORDS and pf.metadata.num_row_groups < pieces:
+            _check_schema(name, spark.read.parquet(path))
             _FILE_RECORDS[key] = _split(pf, os.path.basename(path), pieces)
-    return spark.read.parquet(_FILE_RECORDS[key])
+    return _read_checked(spark, name, path, key)
+
+
+def _read_checked(spark: SparkSession, name: str, path: str,
+                  key: tuple) -> DataFrame:
+    """Read the scan path recorded under ``key``; on first sight, check
+    ``path``'s schema and record it as its own scan path."""
+    if key in _FILE_RECORDS:
+        return spark.read.parquet(_FILE_RECORDS[key])
+    df = spark.read.parquet(path)
+    _check_schema(name, df)
+    _FILE_RECORDS[key] = path
+    return df
+
+
+def _listing(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file under ``path``."""
+    out = []
+    for d, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.relpath(os.path.join(d, f), path),
+                        st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def _check_schema(name: str, df: DataFrame) -> None:

@@ -1,8 +1,8 @@
 """The catalog's morsel layout: a base table with fewer parquet row groups
 than cores is scanned as one contiguous piece per core, with the source's
-schema and rows; every other file is read in place.  Schema validation is
-keyed on the file's version, so a file replaced at the same path is
-checked again."""
+schema and rows; every other file, and every table stored as a directory
+of part files, is read in place.  Schema validation is keyed on the
+table's version, so a table replaced at the same path is checked again."""
 
 from __future__ import annotations
 
@@ -21,7 +21,7 @@ from lingo_db_spark import catalog
 
 SF_BIG = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
 
-pytestmark = pytest.mark.skipif(
+needs_sf01 = pytest.mark.skipif(
     not os.path.exists(catalog.table_path(SF_BIG, "lineitem")),
     reason="sf0.1 testdata absent")
 
@@ -36,6 +36,7 @@ def _sorted_row_hashes(df) -> np.ndarray:
     return np.sort(h.to_numpy())
 
 
+@needs_sf01
 def test_lineitem_reads_as_one_morsel_per_core(spark):
     assert spark.sparkContext.defaultParallelism == 4
     src = catalog.table_path(SF_BIG, "lineitem")
@@ -47,6 +48,7 @@ def test_lineitem_reads_as_one_morsel_per_core(spark):
     assert np.array_equal(_sorted_row_hashes(li), _sorted_row_hashes(direct))
 
 
+@needs_sf01
 def test_events_split_keeps_timestamp_ntz(spark):
     ev = catalog.load_table(spark, SF_BIG, "events")
     assert len(_files(ev)) == 3
@@ -59,6 +61,7 @@ def test_small_tables_are_read_in_place(spark):
         assert _files(df) == [catalog.table_path(SF_DIR, name)], name
 
 
+@needs_sf01
 def test_file_with_enough_row_groups_is_read_in_place(spark, tmp_path):
     t = pq.read_table(catalog.table_path(SF_BIG, "orders"))
     pq.write_table(t, tmp_path / "orders.parquet", row_group_size=40_000)
@@ -68,6 +71,7 @@ def test_file_with_enough_row_groups_is_read_in_place(spark, tmp_path):
     assert df.count() == t.num_rows
 
 
+@needs_sf01
 def test_rewritten_source_gets_a_new_split(spark, tmp_path):
     t = pq.read_table(catalog.table_path(SF_BIG, "orders"))
     path = tmp_path / "orders.parquet"
@@ -82,6 +86,24 @@ def test_rewritten_source_gets_a_new_split(spark, tmp_path):
     assert first.count() == t.num_rows
 
 
+def test_directory_table_is_read_in_place_and_validated_again(spark, tmp_path):
+    """A table written as a Spark directory of part files (the layout of
+    tools/make_scaled_data.py) is scanned in place; replacing its files
+    makes the next session check the schema again."""
+    src = spark.read.parquet(catalog.table_path(SF_DIR, "orders"))
+    path = str(tmp_path / "orders.parquet")
+    src.repartition(3).write.parquet(path)
+    df = catalog.load_table(spark, str(tmp_path), "orders")
+    assert len(_files(df)) == 3
+    assert all(f.startswith(path + os.sep) for f in _files(df))
+    assert df.schema == src.schema
+    assert df.count() == src.count()
+    (src.withColumn("o_orderkey", F.col("o_orderkey").cast("string"))
+     .write.mode("overwrite").parquet(path))
+    with pytest.raises(ValueError, match="schema mismatch for orders"):
+        catalog.load_table(spark.newSession(), str(tmp_path), "orders")
+
+
 def test_replaced_file_is_validated_again(spark, tmp_path):
     good = pa.table({"r_regionkey": pa.array([0, 1], pa.int32()),
                      "r_name": ["AFRICA", "AMERICA"]})
@@ -94,6 +116,7 @@ def test_replaced_file_is_validated_again(spark, tmp_path):
         catalog.load_table(spark.newSession(), str(tmp_path), "region")
 
 
+@needs_sf01
 def test_split_streams_one_batch_at_a_time(spark, tmp_path, monkeypatch):
     """The split never holds the decoded table: it reads no whole table or
     row group, and every batch is released before the next is read."""
